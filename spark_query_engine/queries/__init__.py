@@ -280,6 +280,15 @@ _REPIN_REWRITTEN = (
     "data_sketch_time_rollup",
     "stats_winsorized_mean",
     "pipeline_dedup_cascade",
+    # moved to queries/graph.py onto rewritten builders: re-sign them
+    "graph_triangle_sampled",
+    "graph_kcore_peel",
+    "graph_degree_powerlaw",
+    "graph_link_prediction",
+    "graph_linkpred_eval",
+    "graph_assortativity",
+    # r12 rewrite (raises past its BIGINT bound), never driver-sampled
+    "vec_covariance_matrix",
 )
 
 
@@ -359,6 +368,7 @@ def _ensure_loaded() -> None:
         curation,
         semantic,
         training,
+        graph,
     )
 
     _reorder_registry()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -546,12 +547,55 @@ def test_triangle_count_matches_bruteforce(spark, baskets):
     assert got["n_triangles"] == tris
 
 
+def test_triangle_broadcast_gate_reads_exact_edge_count(
+    spark, tmp_path, monkeypatch
+):
+    """The closing join broadcasts the edge set only when the EXACT
+    edge count fits ``_TRI_BROADCAST_MAX_EDGES``. One order of 6
+    distinct parts is 6 lineitem rows but C(6, 2) = 15 edges — more
+    than a ``2 × rows`` = 12 estimate — so a cap of 12 must take the
+    shuffled closing join, and a cap of 15 the broadcast one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_query_engine.queries import graph
+
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([1] * 6, pa.int64()),
+                "l_partkey": pa.array(range(1, 7), pa.int64()),
+            }
+        ),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    # only the gate's hint may broadcast: size-based broadcasting off
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for cap, broadcast in ((12, False), (15, True)):
+            monkeypatch.setattr(graph, "_TRI_BROADCAST_MAX_EDGES", cap)
+            df = graph.graph_triangle_count(spark, str(tmp_path))
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            closing = [
+                ln for ln in plan.splitlines() if "Join" in ln and "cx#" in ln
+            ]
+            assert closing, plan
+            assert all(
+                ("BroadcastHashJoin" in ln) == broadcast for ln in closing
+            ), plan
+            assert df.collect()[0]["n_triangles"] == 20  # C(6, 3)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_tri_sample_threshold_integer_rule():
     """The DOULION gate threshold is derived by pure integer
     arithmetic so Spark and the DuckDB oracle cannot diverge on a
     float boundary: smallest t in [16, 256] with t³·n ≥ 256³·20000,
     256 when no t qualifies (n < 20000 → p = 1, sampling off)."""
-    from spark_query_engine.queries.training import _tri_sample_threshold as f
+    from spark_query_engine.queries.graph import _tri_sample_threshold as f
 
     assert f(1) == 256  # tiny corpus: keep everything
     assert f(19_999) == 256
@@ -978,7 +1022,7 @@ def test_kcore_delta_peel_cascades(spark, tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from spark_query_engine.queries import training
+    from spark_query_engine.queries import graph
 
     # orders of exactly 2 parts -> one co-purchase edge each
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]  # the path
@@ -1017,10 +1061,31 @@ def test_kcore_delta_peel_cascades(spark, tmp_path, monkeypatch):
         rounds += 1
     assert rounds == 3 and alive == set(clique)  # the cascade is real
 
-    monkeypatch.setattr(training, "_KCORE_K", 2)
+    monkeypatch.setattr(graph, "_KCORE_K", 2)
     out = {
         r["part_id"]: (r["degree"], r["converged"])
-        for r in training.graph_kcore_peel(spark, str(tmp_path)).collect()
+        for r in graph.graph_kcore_peel(spark, str(tmp_path)).collect()
     }
-    assert training.graph_kcore_peel.last_rounds == 3
+    assert graph.graph_kcore_peel.last_rounds == 3
     assert out == {u: (3, True) for u in clique}
+
+
+@pytest.mark.parametrize("name", ["graph_assortativity", "graph_kcore_peel"])
+def test_graph_caches_release_when_result_dropped(spark, name):
+    """The co-purchase queries that persist their edge relations tie
+    those caches to the result: collecting and dropping the result
+    leaves the cache manager empty, with no ``clearCache()``."""
+    import gc
+
+    from spark_query_engine.queries import queries
+
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.isEmpty(), "test requires a clean cache"
+
+    out = queries()[name](spark, SF)
+    out.collect()
+    assert not cm.isEmpty()  # caches in use while the result is alive
+    del out
+    gc.collect()
+    assert cm.isEmpty(), f"{name} caches must release when result dropped"

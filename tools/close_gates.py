@@ -145,12 +145,12 @@ MOMENT_ALLOWLIST: dict[tuple[str, str], str] = {
     ("queries/training.py", 'F.sum(F.col("f") * F.col("n_t"))'):
         "fertility numerator <= total_tokens * max_tokens_per_word "
         "(~2.5e13 * 50 = 1.3e15 at 100 TB) < 2^63",
-    ("queries/training.py", 'F.sum(F.col("x") * F.col("y"))'):
+    ("queries/graph.py", 'F.sum(F.col("x") * F.col("y"))'):
         "degree-powerlaw log-log regression over O(64) degree buckets "
         "of 1e6-quantized logs: sum <= 64 * (3e7)^2 ~ 6e16 < 2^63",
-    ("queries/training.py", 'F.sum(F.col("x") * F.col("x"))'):
+    ("queries/graph.py", 'F.sum(F.col("x") * F.col("x"))'):
         "see x*y row — same O(buckets) relation",
-    ("queries/training.py", 'F.sum(F.col("y") * F.col("y"))'):
+    ("queries/graph.py", 'F.sum(F.col("y") * F.col("y"))'):
         "see x*y row — same O(buckets) relation",
     ("queries/training.py", 'F.sum(F.col("cl") * F.col("ce_below"))'):
         "Mann-Whitney wins <= n0*n1 <= (1e9)^2/4 ~ 2.5e17 < 2^63",

@@ -113,7 +113,7 @@ def ensure_sf3() -> str:
 
 def measure(names: list[str], sf_dirs: list[str]) -> None:
     from spark_query_engine import queries as registry
-    from spark_query_engine.queries import training
+    from spark_query_engine.queries import graph
     from spark_query_engine.operators import dedup as D
     from spark_query_engine.session import get_session
 
@@ -142,7 +142,7 @@ def measure(names: list[str], sf_dirs: list[str]) -> None:
                     )
                 elif name == "graph_kcore_peel":
                     rounds = getattr(
-                        training.graph_kcore_peel, "last_rounds", None
+                        graph.graph_kcore_peel, "last_rounds", None
                     )
             if runs is None:
                 continue
